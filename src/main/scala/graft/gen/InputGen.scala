@@ -199,8 +199,11 @@ object InputGen {
   /** 1-in-16 of PDF docs carry a rendered page-0 raster (PDF-lite v2) with
     * a guaranteed Picture block — exercises the real crop-and-embed path
     * (format_transformer.py:169-172). Rastered pages are small (108×144
-    * pts → 300×400 px at dpi 200) so raster weight stays a rounding error
-    * in generation and bench wall time. */
+    * pts → 300×400 px at dpi 200), yet not light: the page decode, the
+    * crop and the crop's PNG encode make the 62 rastered docs of a
+    * 4000-doc seed-1 corpus (1.6%) take ~28% of single-thread `parseDoc`
+    * time on a 4-vCPU VM (~36% before `Raster.pilCrop` copied
+    * 3BYTE_BGR pixels directly). */
   def isRastered(docId: Long): Boolean =
     math.floorMod(mix(docId ^ 0x5eed5eedL), 16L) == 0L
 

@@ -1,6 +1,6 @@
 package graft.kernel
 
-import java.awt.image.BufferedImage
+import java.awt.image.{BufferedImage, ComponentSampleModel, DataBufferByte, DataBufferInt}
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.ImageIO
 
@@ -126,13 +126,36 @@ object Raster {
     val sx1 = math.max(x1, 0); val sy1 = math.max(y1, 0)
     val sx2 = math.min(x2, img.getWidth); val sy2 = math.min(y2, img.getHeight)
     val cw = sx2 - sx1; val ch = sy2 - sy1
-    if (cw > 0 && ch > 0) {
-      // bulk row transfer (single colormodel conversion pass) — per-pixel
-      // getRGB/setRGB was the extraction hot path in thread samples
-      val px = img.getRGB(sx1, sy1, cw, ch, null, 0, cw)
-      var i = 0
-      while (i < px.length) { px(i) &= 0xffffff; i += 1 }
-      out.setRGB(sx1 - x1, sy1 - y1, cw, ch, px, 0, cw)
+    if (cw > 0 && ch > 0) (img.getType, img.getRaster.getSampleModel) match {
+      case (BufferedImage.TYPE_3BYTE_BGR, sm: ComponentSampleModel)
+          if img.getRaster.getSampleModelTranslateX == 0 && img.getRaster.getSampleModelTranslateY == 0 =>
+        // what ImageIO decodes RGB PNG pages to: sRGB 8-bit components, so
+        // getRGB is the identity on the bytes — copy them straight into the
+        // output ints (~10× faster than getRGB's per-pixel colormodel call)
+        val src = img.getRaster.getDataBuffer.asInstanceOf[DataBufferByte]
+        val bytes = src.getData
+        val dst = out.getRaster.getDataBuffer.asInstanceOf[DataBufferInt].getData
+        val (ps, ss) = (sm.getPixelStride, sm.getScanlineStride)
+        val off = sm.getBandOffsets
+        var y = 0
+        while (y < ch) {
+          var s = src.getOffset + (sy1 + y) * ss + sx1 * ps
+          var d = (sy1 - y1 + y) * w + (sx1 - x1)
+          val end = d + cw
+          while (d < end) {
+            dst(d) = ((bytes(s + off(0)) & 0xff) << 16) | ((bytes(s + off(1)) & 0xff) << 8) |
+              (bytes(s + off(2)) & 0xff)
+            s += ps; d += 1
+          }
+          y += 1
+        }
+      case _ =>
+        // bulk row transfer (single colormodel conversion pass) — per-pixel
+        // getRGB/setRGB was the extraction hot path in thread samples
+        val px = img.getRGB(sx1, sy1, cw, ch, null, 0, cw)
+        var i = 0
+        while (i < px.length) { px(i) &= 0xffffff; i += 1 }
+        out.setRGB(sx1 - x1, sy1 - y1, cw, ch, px, 0, cw)
     }
     out
   }

@@ -18,10 +18,15 @@ import org.apache.spark.sql.functions._
   *   - trivially consistent with the data it describes (it is derived
   *     from it), which is the property resume verification needs.
   * Cost: one extra scan of the output — at commit time that scan reads
-  * the freshly written (page-cached) batch, and it is what produces the
-  * committed row counts anyway.
+  * the freshly written (page-cached) batch. Its aggregate is one row per
+  * bucket, so [[SnapshotRunner]] collects it into the commit manifest and
+  * takes the committed row count from its `n_docs`: no separate count job
+  * and no lineage table write.
   */
 object Lineage {
+
+  /** The columns of [[fromOutput]], in order; all bigint. */
+  val Columns: Vector[String] = Vector("bucket", "n_docs", "n_pages", "checksum", "n_filtered", "n_errors")
 
   def bucketOf(url: Column, nBuckets: Int): Column =
     pmod(xxhash64(url), lit(nBuckets))

@@ -1,9 +1,11 @@
 package graft.scale
 
 import graft.core.PromptMode
+import graft.kernel.{JArray, JInt, JObject, PyJson}
 import graft.pipeline.ExtractPipeline
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
@@ -14,12 +16,19 @@ import scala.jdk.CollectionConverters._
   * The url space is split into `nBuckets` hash buckets
   * (`pmod(xxhash64(url), nBuckets)` — the url-hash partitioning axis).
   * Work proceeds in batches of `bucketsPerCommit` buckets; after a batch's
-  * parquet (data + lineage) lands, a manifest file `commit-<k>.json` is
-  * written via temp-file + atomic rename — the commit point. On restart,
-  * committed buckets are skipped by a partition-pruning filter (the
-  * dataflow analog of an anti-join against committed lineage keys;
+  * parquet data lands, a manifest file `commit-<k>.json` carrying the
+  * batch's per-bucket lineage rows is written via temp-file + atomic
+  * rename — the commit point. Like an Iceberg manifest, the commit holds
+  * its own partition statistics, so no second table is written. On
+  * restart, committed buckets are skipped by a partition-pruning filter
+  * (the dataflow analog of an anti-join against committed lineage keys;
   * SURVEY.md §2.9 — with bucket granularity the anti-join collapses to a
   * scan predicate, which is what survives at 10^12 rows).
+  *
+  * A batch costs the extract-and-write job plus one lineage aggregate over
+  * the read-back (3 Spark jobs under AQE): both reads are given their
+  * schema, so Spark runs no schema-inference job, and the row count is the
+  * lineage's `n_docs` sum rather than a separate count.
   *
   * Crash-safety contract (the snapshot-log semantics):
   *   - batch data is written with DYNAMIC PARTITION OVERWRITE into
@@ -27,13 +36,15 @@ import scala.jdk.CollectionConverters._
   *     manifest rename leaves orphan partitions that the NEXT run simply
   *     overwrites (the job is deterministic), so re-running an
   *     uncommitted batch is idempotent, never additive;
-  *   - [[output]] / [[lineage]] read ONLY committed buckets/commits (a
-  *     partition-pruned filter derived from the manifest) — uncommitted
-  *     partial writes are invisible, exactly like an Iceberg snapshot
-  *     read of the last committed snapshot;
+  *   - [[output]] reads ONLY committed buckets (a partition-pruned filter
+  *     derived from the manifest) — uncommitted partial writes are
+  *     invisible, exactly like an Iceberg snapshot read of the last
+  *     committed snapshot;
   *   - lineage is computed relationally from the read-back committed
   *     batch ([[Lineage.fromOutput]]) — retry/speculation-safe and
-  *     consistent with the data by construction.
+  *     consistent with the data by construction — and lands in the same
+  *     atomic manifest rename as the commit, so [[lineage]] can never
+  *     describe an uncommitted batch nor miss a committed one.
   *
   * No Iceberg runtime jar ships in this sandbox, so the manifest directory
   * IS the snapshot log; the data layout stays `spark.read.parquet`-
@@ -44,14 +55,12 @@ final class SnapshotRunner(
     nBuckets: Int = 16,
     bucketsPerCommit: Int = 4,
     mode: PromptMode = PromptMode.LayoutAll) {
+  import SnapshotRunner.Commit
 
   private val dataDir = s"$outDir/data"
-  private val lineageDir = s"$outDir/lineage"
   private val manifestDir: Path = Paths.get(outDir, "manifest")
   private val bucketedDir = s"$outDir/input_bucketed"
   private val preparedMarker: Path = Paths.get(outDir, "input_bucketed_PREPARED")
-
-  final case class Commit(id: Int, buckets: Seq[Int], rows: Long, wallMs: Long)
 
   def committedBuckets(): Set[Int] = commits().flatMap(_.buckets).toSet
 
@@ -61,17 +70,21 @@ final class SnapshotRunner(
       .filter(_.getFileName.toString.matches("commit-\\d+\\.json"))
       .toVector.sortBy(_.getFileName.toString)
       .map { p =>
-        val j = graft.kernel.PyJson.parse(Files.readString(p)).asInstanceOf[graft.kernel.JObject]
-        def l(k: String) = j.get(k).get.asInstanceOf[graft.kernel.JInt].value.toLong
-        val bs = j.get("buckets").get.asInstanceOf[graft.kernel.JArray].items
-          .map(_.asInstanceOf[graft.kernel.JInt].value.toInt)
-        Commit(l("id").toInt, bs, l("rows"), l("wall_ms"))
+        val j = PyJson.parse(Files.readString(p)).asInstanceOf[JObject]
+        def l(o: JObject, k: String) = o.get(k).get.asInstanceOf[JInt].value.toLong
+        def arr(k: String) = j.get(k).get.asInstanceOf[JArray].items
+        val bs = arr("buckets").map(_.asInstanceOf[JInt].value.toInt)
+        val lineage = arr("lineage").map(o => Lineage.Columns.map(c => c -> l(o.asInstanceOf[JObject], c)).toMap)
+        Commit(l(j, "id").toInt, bs, l(j, "rows"), l(j, "wall_ms"), lineage)
       }
   }
 
   private def writeCommit(c: Commit): Unit = {
     Files.createDirectories(manifestDir)
-    val body = s"""{"id": ${c.id}, "buckets": [${c.buckets.mkString(", ")}], "rows": ${c.rows}, "wall_ms": ${c.wallMs}}"""
+    val body = PyJson.dumps(JObject(
+      "id" -> JInt(c.id), "buckets" -> JArray(c.buckets.map(JInt(_)).toVector),
+      "rows" -> JInt(c.rows), "wall_ms" -> JInt(c.wallMs),
+      "lineage" -> JArray(c.lineage.map(r => JObject(Lineage.Columns.map(k => k -> JInt(r(k))): _*)))))
     val tmp = manifestDir.resolve(s".commit-${c.id}.json.tmp")
     Files.writeString(tmp, body)
     Files.move(tmp, manifestDir.resolve(f"commit-${c.id}%05d.json"),
@@ -105,11 +118,13 @@ final class SnapshotRunner(
 
   /** The scan a commit batch reads when the bucketized layout exists:
     * partition-pruned to `buckets` (visible as PartitionFilters in the
-    * plan; only those buckets' files are listed). None before
-    * [[prepareInput]] has committed its marker. */
-  def batchScan(spark: SparkSession, buckets: Seq[Int]): Option[DataFrame] =
+    * plan; only those buckets' files are listed). `schema` is the schema
+    * of the input given to [[prepareInput]]; passing it spares a
+    * schema-inference job per scan. None before [[prepareInput]] has
+    * committed its marker. */
+  def batchScan(spark: SparkSession, buckets: Seq[Int], schema: StructType): Option[DataFrame] =
     if (!Files.exists(preparedMarker)) None
-    else Some(spark.read.parquet(bucketedDir)
+    else Some(spark.read.schema(schema.add("bucket", IntegerType)).parquet(bucketedDir)
       .filter(col("bucket").isin(buckets.map(Integer.valueOf): _*)))
 
   /** Process up to `maxBatches` uncommitted bucket-batches (-1 = all).
@@ -129,24 +144,24 @@ final class SnapshotRunner(
       // bucketized layout (prepareInput) → partition-pruned scan of just
       // this batch's buckets; otherwise fall back to filtering the full
       // input (correct, but a full scan per batch — fine at test scale)
-      val batchInput = batchScan(spark, buckets)
+      val batchInput = batchScan(spark, buckets, input.schema)
         .map(_.drop("bucket"))
         .getOrElse(input.filter(inBatch))
       val out = ExtractPipeline.run(batchInput, mode).withColumn("bucket", bucketCol)
       // dynamic overwrite: only the bucket=<k> partitions present in `out`
       // are replaced — a rerun of an uncommitted batch lands identically
       out.write.mode("overwrite").partitionBy("bucket").parquet(dataDir)
-      // read back the committed bytes (partition-pruned) for row count +
-      // lineage — lineage derived from committed data is retry-safe and
-      // exactly describes what the snapshot contains
-      val committed = spark.read.parquet(dataDir)
+      // read back the committed bytes (partition-pruned) for lineage —
+      // lineage derived from committed data is retry-safe and exactly
+      // describes what the snapshot contains; its ≤ bucketsPerCommit rows
+      // ride in the manifest, and their n_docs sum is the commit's row count
+      val committed = spark.read.schema(out.schema).parquet(dataDir)
         .filter(col("bucket").isin(buckets.map(Integer.valueOf): _*))
-      val rows = committed.count()
       val lineage = Lineage.fromOutput(committed.drop("bucket"), nBuckets)
-        .withColumn("commit_id", lit(commitId))
-      lineage.coalesce(1).write.mode("overwrite")
-        .partitionBy("commit_id").parquet(lineageDir)
-      writeCommit(Commit(commitId, buckets, rows, System.currentTimeMillis() - t0))
+        .collect().toVector.sortBy(_.getAs[Long]("bucket"))
+        .map(r => Lineage.Columns.map(c => c -> r.getAs[Long](c)).toMap)
+      writeCommit(Commit(commitId, buckets, lineage.map(_("n_docs")).sum,
+        System.currentTimeMillis() - t0, lineage))
       commitId += 1
     } finally prevOverwriteMode match {
       case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
@@ -163,10 +178,20 @@ final class SnapshotRunner(
       .filter(col("bucket").isin(done.map(Integer.valueOf): _*))
   }
 
-  /** Committed lineage rows (commit_id, bucket, n_docs, n_pages, checksum,
-    * n_filtered, n_errors), restricted to manifest-committed commits. */
+  /** Committed lineage rows (bucket, n_docs, n_pages, checksum,
+    * n_filtered, n_errors, commit_id), read from the manifests: a local
+    * relation, no scan. */
   def lineage(spark: SparkSession): DataFrame = {
-    val ids = commits().map(c => Integer.valueOf(c.id))
-    spark.read.parquet(lineageDir).filter(col("commit_id").isin(ids: _*))
+    val rows = commits().flatMap(c => c.lineage.map(r => Row.fromSeq(Lineage.Columns.map(r) :+ c.id)))
+    val schema = StructType(Lineage.Columns.map(StructField(_, LongType)) :+
+      StructField("commit_id", IntegerType))
+    spark.createDataFrame(rows.asJava, schema)
   }
+}
+
+object SnapshotRunner {
+  /** A manifest entry. `lineage` holds one row per non-empty bucket of the
+    * batch, keyed by [[Lineage.Columns]]; `rows` is their `n_docs` sum. */
+  final case class Commit(id: Int, buckets: Seq[Int], rows: Long, wallMs: Long,
+      lineage: Vector[Map[String, Long]])
 }

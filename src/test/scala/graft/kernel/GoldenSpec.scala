@@ -155,6 +155,20 @@ class Layout2MdGoldenSpec extends AnyFunSuite {
     assert(cropped.getWidth == 20 && cropped.getHeight == 20)
     assert((cropped.getRGB(5, 5) & 0xffffff) == (img.getRGB(45, 45) & 0xffffff))
     assert((cropped.getRGB(15, 15) & 0xffffff) == 0, "outside source = black")
+    // a PNG-decoded raster (3BYTE_BGR, the byte-copy path) crops exactly
+    // like getRGB, in bounds and across the edge
+    val decoded = Raster.decode(graft.ops.MultimodalOps.Codec.encodePng(
+      graft.ops.MultimodalOps.patternImage(70, 50, 5L)))
+    assert(decoded.getType == java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
+    for ((x1, y1, x2, y2) <- Seq((7, 3, 51, 40), (-5, 30, 80, 62))) {
+      val c = Raster.pilCrop(decoded, x1, y1, x2, y2)
+      assert(c.getWidth == x2 - x1 && c.getHeight == y2 - y1)
+      for (y <- 0 until c.getHeight; x <- 0 until c.getWidth) {
+        val (sx, sy) = (x + x1, y + y1)
+        val want = if (sx >= 0 && sy >= 0 && sx < 70 && sy < 50) decoded.getRGB(sx, sy) & 0xffffff else 0
+        assert((c.getRGB(x, y) & 0xffffff) == want, s"box ($x1,$y1,$x2,$y2) pixel ($x,$y)")
+      }
+    }
     val cells = Vector(JObject(
       "bbox" -> JArray(Vector(0, 0, 10, 10).map(i => JInt(BigInt(i)))),
       "category" -> JString("Picture")))

@@ -2,6 +2,8 @@ package graft.scale
 
 import graft.SparkTestBase
 import graft.gen.InputTable
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -43,6 +45,47 @@ class SnapshotResumeSpec extends AnyFunSuite {
     assert(lin.count() > 0)
     assert(lin.select(countDistinct("commit_id")).head().getLong(0) == 4)
     assert(lin.agg(sum("n_docs")).head().getLong(0) == 120L)
+
+    // manifest lineage ≡ lineage recomputed from the committed output, row
+    // for row; each manifest's rows = its batch's committed row count; no
+    // lineage table is written beside the data
+    val cols = Lineage.Columns.map(col)
+    val out = resumed.output(spark)
+    val fromManifest = lin.select(cols: _*).orderBy("bucket").collect().toSeq
+    val recomputed = Lineage.fromOutput(out.drop("bucket"), 8)
+      .select(cols: _*).orderBy("bucket").collect().toSeq
+    assert(fromManifest == recomputed)
+    resumed.commits().foreach { c =>
+      assert(c.rows == out.filter(col("bucket").isin(c.buckets.map(Integer.valueOf): _*)).count(),
+        s"commit ${c.id}")
+    }
+    assert(!Files.exists(java.nio.file.Paths.get(dirB, "lineage")))
+  }
+
+  test("a commit batch on a prepared runner submits at most 3 Spark jobs") {
+    val input = InputTable.generate(spark, 120L, seed = 7L).cache()
+    val r = new SnapshotRunner(Files.createTempDirectory("snap-jobs").toString,
+      nBuckets = 8, bucketsPerCommit = 2)
+    r.prepareInput(spark, input)
+    val sc = spark.sparkContext
+    val group = "snapshot-job-count"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "one commit batch")
+    try assert(r.run(spark, input, maxBatches = 1) == 1)
+    finally {
+      sc.clearJobGroup()
+      ListenerBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    // extract-and-write + the lineage aggregate's two AQE stages; no
+    // schema inference, count or lineage-table write
+    assert(jobs.get() > 0 && jobs.get() <= 3, s"${jobs.get()} jobs")
   }
 
   test("bucketized input: batch scans read ONLY their buckets' files; output identical; resume green") {
@@ -51,13 +94,13 @@ class SnapshotResumeSpec extends AnyFunSuite {
     val refDir = Files.createTempDirectory("snap-ref").toString
 
     val r = new SnapshotRunner(dir, nBuckets = 8, bucketsPerCommit = 2)
-    assert(r.batchScan(spark, Seq(0, 1)).isEmpty, "no bucketized layout before prepareInput")
+    assert(r.batchScan(spark, Seq(0, 1), input.schema).isEmpty, "no bucketized layout before prepareInput")
     r.prepareInput(spark, input)
     r.prepareInput(spark, input) // idempotent no-op (marker present)
 
     // partition pruning, proved at EXECUTION level: every file the batch
     // scan actually reads lives under its own buckets' partition dirs
-    val scan = r.batchScan(spark, Seq(0, 1)).get
+    val scan = r.batchScan(spark, Seq(0, 1), input.schema).get
     assert(scan.queryExecution.executedPlan.toString().contains("PartitionFilters"),
       "bucket filter must prune partitions, not post-filter rows")
     val filesRead = scan.select(input_file_name()).distinct().collect().map(_.getString(0))
